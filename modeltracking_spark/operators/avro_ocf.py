@@ -472,30 +472,6 @@ def _dec_resolved(w, r, data: bytes, pos: int, wenv: dict, renv: dict):
 
 # ----------------------------------------------------------------- OCF
 
-def _zstd_encode(body: bytes) -> bytes:
-    """One standalone zstd frame for the ``zstandard`` codec: libzstd
-    when present (the reference encoder), the from-spec subset encoder
-    otherwise — both decode through ``operators/zstd.py``."""
-    try:
-        import ctypes
-        import ctypes.util
-
-        lib = ctypes.CDLL(ctypes.util.find_library("zstd"))
-        lib.ZSTD_compressBound.restype = ctypes.c_size_t
-        lib.ZSTD_compress.restype = ctypes.c_size_t
-        lib.ZSTD_isError.restype = ctypes.c_uint
-        bound = lib.ZSTD_compressBound(len(body))
-        buf = ctypes.create_string_buffer(bound)
-        n = lib.ZSTD_compress(buf, bound, body, len(body), 3)
-        if lib.ZSTD_isError(n):
-            raise ValueError("libzstd compress failed")
-        return buf.raw[:n]
-    except Exception:
-        from modeltracking_spark.operators.zstd import zstd_compress
-
-        return zstd_compress(body)
-
-
 def avro_ocf_write(records: list[dict], fields: list[tuple[str, object]]
                    | None = None, name: str = "row",
                    codec: str = "deflate", block_records: int = 1000,
@@ -559,7 +535,13 @@ def avro_ocf_write(records: list[dict], fields: list[tuple[str, object]]
         elif codec == "zstandard":
             # spec: block is a standalone zstd frame — libzstd when
             # present (reference encoder), from-spec subset otherwise
-            body = _zstd_encode(body)
+            from modeltracking_spark.operators.zstd import (
+                libzstd_compress,
+                zstd_compress,
+            )
+
+            frame = libzstd_compress(body, 3)
+            body = zstd_compress(body) if frame is None else frame
         elif codec != "null":
             raise NotImplementedError(f"avro codec {codec!r}")
         out += zigzag_encode(len(block))

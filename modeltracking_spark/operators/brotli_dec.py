@@ -747,94 +747,63 @@ def brotli_roundtrip_stats(
     payload_col: str = "payload",
     id_col: str = "doc_id",
 ):
-    """Per-row brotli ENCODE -> from-spec DECODE -> stats, Arrow-
-    batched. The encoder is libbrotlienc via ctypes when present (the
-    REFERENCE implementation; quality cycled 1/5/9/11 and mode cycled
-    generic/text by id so stream shapes vary from uncompressed blocks
-    to dictionary+transform+context-modeled commands) and the from-spec
-    literal-entropy encoder otherwise. Lossless, so output md5 is
-    encoder-independent. Narrow map, no shuffle. Output: (id, orig_len,
-    quality, dec_md5, ok)."""
-    import hashlib as _hashlib
+    """Per-row brotli ENCODE -> from-spec DECODE -> stats through
+    :func:`~modeltracking_spark.operators.kernel.codec_roundtrip_stats`.
+    The encoder is libbrotlienc via ctypes when present (the REFERENCE
+    implementation, bound once per partition on the executor; quality
+    cycled 1/5/9/11 and mode cycled generic/text by id so stream shapes
+    vary from uncompressed blocks to dictionary+transform+context-
+    modeled commands) and the from-spec literal-entropy encoder
+    otherwise. Lossless, so output md5 is encoder-independent. Narrow
+    map, no shuffle. Output: (id, orig_len, quality, dec_md5, ok)."""
+    from modeltracking_spark.operators.kernel import codec_roundtrip_stats
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    qualities = [1, 5, 9, 11]
 
-    from modeltracking_spark.operators.kernel import widen_for_kernel
+    def make_codec():
+        import ctypes
+        import ctypes.util
 
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("quality", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        enc = None
         try:
-            import ctypes
-            import ctypes.util
-
-            _lib = ctypes.CDLL(
+            lib = ctypes.CDLL(
                 ctypes.util.find_library("brotlienc") or "libbrotlienc.so.1"
             )
-            _lib.BrotliEncoderCompress.restype = ctypes.c_int
-            _lib.BrotliEncoderCompress.argtypes = [
+        except OSError:
+            lib = None
+        if lib is not None:
+            lib.BrotliEncoderCompress.restype = ctypes.c_int
+            lib.BrotliEncoderCompress.argtypes = [
                 ctypes.c_int, ctypes.c_int, ctypes.c_int, ctypes.c_size_t,
                 ctypes.c_char_p, ctypes.POINTER(ctypes.c_size_t),
                 ctypes.c_char_p,
             ]
 
-            def enc(raw, quality, mode):
-                bound = len(raw) + (len(raw) >> 1) + 1024
-                buf = ctypes.create_string_buffer(bound)
-                n = ctypes.c_size_t(bound)
-                if not _lib.BrotliEncoderCompress(
-                    quality, 22, mode, len(raw), raw, ctypes.byref(n), buf
-                ):
-                    raise ValueError("libbrotlienc compress failed")
-                return buf.raw[:n.value]
-        except Exception:
-            enc = None
-        for pdf in batches:
-            ids, lens, quals, md5s, oks = [], [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = (text.encode("utf-8") if isinstance(text, str)
-                       else bytes(text))
-                did = int(did)
-                q = [1, 5, 9, 11][did % 4]
-                if enc is not None:
-                    blob = enc(raw, q, (did >> 2) % 2)
-                else:
-                    blob = brotli_compress(raw)
-                dec = brotli_decompress(blob)
-                ids.append(did)
-                lens.append(len(raw))
-                quals.append([1, 5, 9, 11][did % 4])
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "quality": quals,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
+        def reference_encode(raw, quality, mode):
+            bound = len(raw) + (len(raw) >> 1) + 1024
+            buf = ctypes.create_string_buffer(bound)
+            n = ctypes.c_size_t(bound)
+            if not lib.BrotliEncoderCompress(
+                quality, 22, mode, len(raw), raw, ctypes.byref(n), buf
+            ):
+                raise ValueError("libbrotlienc compress failed")
+            return buf.raw[:n.value]
 
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(
-        kernel, schema
+        def encode(ids, raws):
+            if lib is None:
+                return [brotli_compress(raw) for raw in raws]
+            return [
+                reference_encode(raw, qualities[did % 4], (did >> 2) % 2)
+                for did, raw in zip(ids, raws)
+            ]
+
+        return encode, brotli_decompress
+
+    def quality(did, raw, blob):
+        return qualities[did % 4]
+
+    return codec_roundtrip_stats(
+        df, make_codec, payload_col, id_col,
+        extra=[("quality", "long", quality)],
     )
 
 

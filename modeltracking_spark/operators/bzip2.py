@@ -21,7 +21,7 @@ out-of-range selectors/origPtr, CRC mismatches, truncation.
 
 from __future__ import annotations
 
-from modeltracking_spark.operators.kernel import widen_for_kernel
+from modeltracking_spark.operators.kernel import codec_roundtrip_stats
 
 _MASK32 = 0xFFFFFFFF
 
@@ -443,52 +443,21 @@ def bz2_roundtrip_stats(
     id_col: str = "doc_id",
     level: int = 1,
 ):
-    """Per-row stdlib-bz2 ENCODE -> from-spec DECODE -> stats,
-    Arrow-batched — cross-validating two independent implementations
-    of the public format on every row (the jsonl_gz pattern). Narrow
-    map, no shuffle. Output: (id, orig_len, dec_md5, ok)."""
-    import bz2 as _bz2
-    import hashlib as _hashlib
+    """Per-row stdlib-bz2 ENCODE -> from-spec DECODE -> stats through
+    :func:`codec_roundtrip_stats` — cross-validating two independent
+    implementations of the public format on every row (the jsonl_gz
+    pattern). Narrow map, no shuffle. Output: (id, orig_len, dec_md5,
+    ok)."""
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    def make_codec():
+        import bz2
 
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
+        def encode(ids, raws):
+            return [bz2.compress(raw, level) for raw in raws]
 
-    def kernel(batches):
-        import pandas as pd
+        return encode, bz2_decompress
 
-        for pdf in batches:
-            ids, lens, md5s, oks = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = text.encode("utf-8") if isinstance(text, str) else bytes(text)
-                dec = bz2_decompress(_bz2.compress(raw, level))
-                ids.append(int(did))
-                lens.append(len(raw))
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
-
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(kernel, schema)
+    return codec_roundtrip_stats(df, make_codec, payload_col, id_col)
 
 
 def bz2_stream_offsets_from_file(fh, chunk_size: int = 4 << 20

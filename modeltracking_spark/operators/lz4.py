@@ -28,7 +28,7 @@ rows; 100 TB of shards decode embarrassingly parallel.
 
 from __future__ import annotations
 
-from modeltracking_spark.operators.kernel import widen_for_kernel
+from modeltracking_spark.operators.kernel import codec_roundtrip_stats
 
 _MASK32 = 0xFFFFFFFF
 
@@ -353,61 +353,30 @@ def lz4_roundtrip_stats(
     id_col: str = "doc_id",
     max_block: int = 1024,
 ):
-    """Per-row LZ4 frame compress -> decompress -> stats, Arrow-batched
-    (``mapInPandas``) — the codec-tier shape: a narrow per-row kernel,
-    no shuffle, no cross-row state, embarrassingly parallel at 100 TB.
-    The decode side verifies the header checksum byte, every block
-    checksum, the content checksum, and the declared content size, so a
-    single flipped bit anywhere in the stream fails loudly rather than
-    hashing wrong.  ``max_block=1024`` forces multi-block frames on
-    kilobyte payloads (block sizes below the BD maximum are spec-legal),
-    so the block loop itself is on the attested path.
+    """Per-row LZ4 frame compress -> decompress -> stats through
+    :func:`codec_roundtrip_stats` — the codec-tier shape: a narrow
+    per-row kernel, no shuffle, no cross-row state, embarrassingly
+    parallel at 100 TB. The decode side verifies the header checksum
+    byte, every block checksum, the content checksum, and the declared
+    content size, so a single flipped bit anywhere in the stream fails
+    loudly rather than hashing wrong.  ``max_block=1024`` forces
+    multi-block frames on kilobyte payloads (block sizes below the BD
+    maximum are spec-legal), so the block loop itself is on the
+    attested path.
 
     Output: (id, orig_len, n_blocks, dec_md5, ok) — all SQL-replayable
-    from the payload formula (the compressed bytes never leave the
-    kernel)."""
-    import hashlib as _hashlib
+    from the payload formula."""
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    def make_codec():
+        def encode(ids, raws):
+            return [lz4_frame_compress(raw, max_block=max_block) for raw in raws]
+
+        return encode, lz4_frame_decompress
+
+    def n_blocks(did, raw, blob):
+        return (len(raw) + max_block - 1) // max_block
+
+    return codec_roundtrip_stats(
+        df, make_codec, payload_col, id_col,
+        extra=[("n_blocks", "long", n_blocks)],
     )
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("n_blocks", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, lens, blocks, md5s, oks = [], [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = text.encode("utf-8") if isinstance(text, str) else bytes(text)
-                frame = lz4_frame_compress(raw, max_block=max_block)
-                dec = lz4_frame_decompress(frame)
-                ids.append(int(did))
-                lens.append(len(raw))
-                blocks.append((len(raw) + max_block - 1) // max_block)
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "n_blocks": blocks,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
-
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(kernel, schema)

@@ -32,7 +32,7 @@ beyond the produced output, truncation, missing terminator.
 
 from __future__ import annotations
 
-from modeltracking_spark.operators.kernel import widen_for_kernel
+from modeltracking_spark.operators.kernel import codec_roundtrip_stats
 
 _MASK32 = 0xFFFFFFFF
 _TOP = 1 << 24          # range-coder normalization bound
@@ -364,69 +364,41 @@ def lzma_roundtrip_stats(
     preset: int = 6,
 ):
     """Per-row stdlib-liblzma ENCODE (FORMAT_ALONE, lc/lp/pb varied by
-    doc_id) -> from-spec DECODE -> stats, Arrow-batched — every row
-    cross-validates two independent implementations of the public
-    format, across literal-context/position-bit settings. Narrow map,
-    no shuffle. Output: (id, orig_len, lclppb, dec_md5, ok)."""
-    import hashlib as _hashlib
-    import lzma as _lzma
+    doc_id) -> from-spec DECODE -> stats through
+    :func:`codec_roundtrip_stats` — every row cross-validates two
+    independent implementations of the public format, across
+    literal-context/position-bit settings. Narrow map, no shuffle.
+    Output: (id, orig_len, lclppb, dec_md5, ok)."""
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    def make_codec():
+        import lzma
 
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("lclppb", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
+        # (lc, lp, pb) matrix cycled by doc_id — exercises literal context
+        # splits, position masks, and the lc=0/lp>0 arms of the model
+        props = [(3, 0, 2), (0, 0, 0), (1, 1, 1), (4, 0, 2), (0, 2, 0),
+                 (2, 0, 1)]
 
-    # (lc, lp, pb) matrix cycled by doc_id — exercises literal context
-    # splits, position masks, and the lc=0/lp>0 arms of the model
-    _PROPS = [(3, 0, 2), (0, 0, 0), (1, 1, 1), (4, 0, 2), (0, 2, 0), (2, 0, 1)]
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, lens, props, md5s, oks = [], [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = (
-                    text.encode("utf-8") if isinstance(text, str)
-                    else bytes(text)
-                )
-                lc, lp, pb = _PROPS[int(did) % len(_PROPS)]
-                enc = _lzma.compress(
+        def encode(ids, raws):
+            out = []
+            for did, raw in zip(ids, raws):
+                lc, lp, pb = props[did % len(props)]
+                out.append(lzma.compress(
                     raw,
-                    format=_lzma.FORMAT_ALONE,
+                    format=lzma.FORMAT_ALONE,
                     filters=[{
-                        "id": _lzma.FILTER_LZMA1,
+                        "id": lzma.FILTER_LZMA1,
                         "preset": preset,
                         "lc": lc, "lp": lp, "pb": pb,
                     }],
-                )
-                dec = lzma_alone_decompress(enc)
-                ids.append(int(did))
-                lens.append(len(raw))
-                props.append((pb * 5 + lp) * 9 + lc)
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "lclppb": props,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
+                ))
+            return out
 
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(kernel, schema)
+        return encode, lzma_alone_decompress
+
+    def lclppb(did, raw, blob):
+        return blob[0]  # the header's properties byte, (pb*5+lp)*9+lc
+
+    return codec_roundtrip_stats(
+        df, make_codec, payload_col, id_col,
+        extra=[("lclppb", "long", lclppb)],
+    )

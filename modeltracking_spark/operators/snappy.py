@@ -30,7 +30,7 @@ shuffle, no cross-row state; shards decode embarrassingly parallel.
 
 from __future__ import annotations
 
-from modeltracking_spark.operators.kernel import widen_for_kernel
+from modeltracking_spark.operators.kernel import codec_roundtrip_stats
 
 _MASK32 = 0xFFFFFFFF
 
@@ -302,53 +302,23 @@ def snappy_roundtrip_stats(
     id_col: str = "doc_id",
     max_chunk: int = 1024,
 ):
-    """Per-row Snappy framing compress -> decompress -> stats,
-    Arrow-batched — the codec-tier narrow-map shape (see
-    ``lz4_roundtrip_stats``). ``max_chunk=1024`` puts multi-chunk
-    frames and per-chunk CRC verification on the attested path.
+    """Per-row Snappy framing compress -> decompress -> stats — the
+    codec-tier narrow-map shape (see
+    :func:`~modeltracking_spark.operators.kernel.codec_roundtrip_stats`).
+    ``max_chunk=1024`` puts multi-chunk frames and per-chunk CRC
+    verification on the attested path.
     Output: (id, orig_len, n_chunks, dec_md5, ok)."""
-    import hashlib as _hashlib
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    def make_codec():
+        def encode(ids, raws):
+            return [snappy_frame_compress(raw, max_chunk=max_chunk) for raw in raws]
+
+        return encode, snappy_frame_decompress
+
+    def n_chunks(did, raw, blob):
+        return (len(raw) + max_chunk - 1) // max_chunk
+
+    return codec_roundtrip_stats(
+        df, make_codec, payload_col, id_col,
+        extra=[("n_chunks", "long", n_chunks)],
     )
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("n_chunks", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, lens, chunks, md5s, oks = [], [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = text.encode("utf-8") if isinstance(text, str) else bytes(text)
-                frame = snappy_frame_compress(raw, max_chunk=max_chunk)
-                dec = snappy_frame_decompress(frame)
-                ids.append(int(did))
-                lens.append(len(raw))
-                chunks.append((len(raw) + max_chunk - 1) // max_chunk)
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "n_chunks": chunks,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
-
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(kernel, schema)

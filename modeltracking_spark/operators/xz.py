@@ -29,7 +29,7 @@ while the remaining per-architecture BCJ variants raise
 
 from __future__ import annotations
 
-from modeltracking_spark.operators.kernel import widen_for_kernel
+from modeltracking_spark.operators.kernel import codec_roundtrip_stats
 from modeltracking_spark.operators.lzma_alone import LzmaDecoder, split_props
 
 _MAGIC = b"\xfd7zXZ\x00"
@@ -423,76 +423,43 @@ def xz_roundtrip_stats(
     preset: int = 6,
 ):
     """Per-row stdlib-liblzma ENCODE (FORMAT_XZ, check type and
-    lc/lp/pb cycled by doc_id) -> from-spec xz/LZMA2 DECODE -> stats,
-    Arrow-batched — every row cross-validates two independent
-    implementations of the container AND the chunk layer. Narrow map,
-    no shuffle. Output: (id, orig_len, check_id, dec_md5, ok)."""
-    import hashlib as _hashlib
-    import lzma as _lzma
+    lc/lp/pb cycled by doc_id) -> from-spec xz/LZMA2 DECODE -> stats
+    through :func:`codec_roundtrip_stats` — every row cross-validates
+    two independent implementations of the container AND the chunk
+    layer. Narrow map, no shuffle. Output: (id, orig_len, check_id,
+    dec_md5, ok)."""
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    def make_codec():
+        import lzma
 
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("check_id", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
+        checks = [lzma.CHECK_CRC64, lzma.CHECK_CRC32, lzma.CHECK_SHA256,
+                  lzma.CHECK_NONE]
+        props = [(3, 0, 2), (0, 0, 0), (2, 1, 1), (1, 2, 0)]
 
-    _CHECKS = [_lzma.CHECK_CRC64, _lzma.CHECK_CRC32, _lzma.CHECK_SHA256,
-               _lzma.CHECK_NONE]
-    _PROPS = [(3, 0, 2), (0, 0, 0), (2, 1, 1), (1, 2, 0)]
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, lens, checks, md5s, oks = [], [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = (
-                    text.encode("utf-8") if isinstance(text, str)
-                    else bytes(text)
-                )
-                did = int(did)
-                check = _CHECKS[did % 4]
-                lc, lp, pb = _PROPS[did % len(_PROPS)]
-                enc = _lzma.compress(
+        def encode(ids, raws):
+            out = []
+            for did, raw in zip(ids, raws):
+                lc, lp, pb = props[did % len(props)]
+                out.append(lzma.compress(
                     raw,
-                    format=_lzma.FORMAT_XZ,
-                    check=check,
+                    format=lzma.FORMAT_XZ,
+                    check=checks[did % 4],
                     filters=[{
-                        "id": _lzma.FILTER_LZMA2,
+                        "id": lzma.FILTER_LZMA2,
                         "preset": preset,
                         "lc": lc, "lp": lp, "pb": pb,
                     }],
-                )
-                dec = xz_decompress(enc)
-                ids.append(did)
-                lens.append(len(raw))
-                checks.append(int(check))
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "check_id": checks,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
+                ))
+            return out
 
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(
-        kernel, schema
+        return encode, xz_decompress
+
+    def check_id(did, raw, blob):
+        return blob[7]  # the stream header's check-type byte
+
+    return codec_roundtrip_stats(
+        df, make_codec, payload_col, id_col,
+        extra=[("check_id", "long", check_id)],
     )
 
 
@@ -507,126 +474,82 @@ def xz_bcj_roundtrip_stats(
     (stdlib liblzma) and [arm64] + [riscv] (the xz CLI: stdlib 3.11
     exposes no constants for those two, liblzma 5.8 does) — all ahead
     of LZMA2 -> from-spec chain decode (operators/bcj.py transforms
-    applied in reverse after LZMA2) -> stats, Arrow-batched. Narrow
-    map, no shuffle. Output: (id, orig_len, chain_id, dec_md5, ok)."""
-    import hashlib as _hashlib
-    import lzma as _lzma
+    applied in reverse after LZMA2) -> stats through
+    :func:`codec_roundtrip_stats`. Narrow map, no shuffle. Output:
+    (id, orig_len, chain_id, dec_md5, ok)."""
+    import lzma
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    chains = [
+        [{"id": lzma.FILTER_X86}],
+        [{"id": lzma.FILTER_DELTA, "dist": 3}],
+        [{"id": lzma.FILTER_DELTA, "dist": 1}, {"id": lzma.FILTER_X86}],
+        [{"id": lzma.FILTER_ARM}],
+        [{"id": lzma.FILTER_ARMTHUMB}],
+        [{"id": lzma.FILTER_POWERPC}],
+        [{"id": lzma.FILTER_SPARC}],
+        [{"id": lzma.FILTER_IA64}],
+        "arm64",  # xz CLI: no stdlib constants for these in 3.11
+        "riscv",
+    ]
 
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("chain_id", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
-
-    def kernel(batches):
-        import os as _os
+    def make_codec():
+        import os
         import subprocess
         import tempfile
 
-        import pandas as pd
-
-        chains = [
-            [{"id": _lzma.FILTER_X86}],
-            [{"id": _lzma.FILTER_DELTA, "dist": 3}],
-            [{"id": _lzma.FILTER_DELTA, "dist": 1},
-             {"id": _lzma.FILTER_X86}],
-            [{"id": _lzma.FILTER_ARM}],
-            [{"id": _lzma.FILTER_ARMTHUMB}],
-            [{"id": _lzma.FILTER_POWERPC}],
-            [{"id": _lzma.FILTER_SPARC}],
-            [{"id": _lzma.FILTER_IA64}],
-            "arm64",  # xz CLI: no stdlib constants for these in 3.11
-            "riscv",
-        ]
-
-        def cli_encode_group(chain: str, check: str,
-                             items: list) -> dict:
-            """ONE xz CLI invocation for every payload in the group
-            (round 13, SCALE probe fix: per-row subprocess spawns
-            scaled superlinearly — 10x rows meant 10x fork/exec under
-            full-core contention, 26x wall).  The .xz container has
-            no filename header, so file-mode output is byte-identical
-            to the old per-row stdin mode."""
-            out = {}
-            with tempfile.TemporaryDirectory(
-                    prefix="mt_xzbcj_") as td:
-                for i, (_did, raw) in enumerate(items):
-                    with open(_os.path.join(td, f"{i}.bin"),
-                              "wb") as fh:
+        def cli_encode(chain: str, check: str, raws: list) -> list:
+            """ONE xz CLI invocation for every payload of a (chain,
+            check) group in the batch: per-row subprocess spawns scaled
+            superlinearly — 10x rows meant 10x fork/exec under
+            full-core contention, 26x wall.  The .xz container has no
+            filename header, so file-mode output is byte-identical to
+            per-row stdin mode."""
+            with tempfile.TemporaryDirectory(prefix="mt_xzbcj_") as td:
+                paths = [os.path.join(td, f"{i}.bin") for i in range(len(raws))]
+                for path, raw in zip(paths, raws):
+                    with open(path, "wb") as fh:
                         fh.write(raw)
                 subprocess.run(
-                    [xz_cli_path(), "--" + chain,
-                     "--lzma2=preset=1", "--check=" + check, "-k"]
-                    + [_os.path.join(td, f"{i}.bin")
-                       for i in range(len(items))],
+                    [xz_cli_path(), "--" + chain, "--lzma2=preset=1",
+                     "--check=" + check, "-k"] + paths,
                     capture_output=True, check=True,
                 )
-                for i, (did, _raw) in enumerate(items):
-                    with open(_os.path.join(td, f"{i}.bin.xz"),
-                              "rb") as fh:
-                        out[did] = fh.read()
-            return out
+                out = []
+                for path in paths:
+                    with open(path + ".xz", "rb") as fh:
+                        out.append(fh.read())
+                return out
 
-        for pdf in batches:
-            rows = []
+        def encode(ids, raws):
+            blobs = [None] * len(raws)
             cli_groups: dict = {}
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = (
-                    text.encode("utf-8") if isinstance(text, str)
-                    else bytes(text)
-                )
-                did = int(did)
-                cid = did % len(chains)
-                rows.append((did, raw, cid))
-                if isinstance(chains[cid], str):
-                    key = (chains[cid], ["crc64", "crc32"][did % 2])
-                    cli_groups.setdefault(key, []).append((did, raw))
-            cli_enc = {}
-            for (chain, check), items in cli_groups.items():
-                cli_enc.update(cli_encode_group(chain, check, items))
-            ids, lens, cids, md5s, oks = [], [], [], [], []
-            for did, raw, cid in rows:
-                if isinstance(chains[cid], str):
-                    enc = cli_enc[did]
+            for i, (did, raw) in enumerate(zip(ids, raws)):
+                chain = chains[did % len(chains)]
+                if isinstance(chain, str):
+                    key = (chain, ["crc64", "crc32"][did % 2])
+                    cli_groups.setdefault(key, []).append(i)
                 else:
-                    enc = _lzma.compress(
+                    blobs[i] = lzma.compress(
                         raw,
-                        format=_lzma.FORMAT_XZ,
-                        check=[_lzma.CHECK_CRC64,
-                               _lzma.CHECK_CRC32][did % 2],
-                        filters=chains[cid]
-                        + [{"id": _lzma.FILTER_LZMA2, "preset": 1}],
+                        format=lzma.FORMAT_XZ,
+                        check=[lzma.CHECK_CRC64, lzma.CHECK_CRC32][did % 2],
+                        filters=chain
+                        + [{"id": lzma.FILTER_LZMA2, "preset": 1}],
                     )
-                dec = xz_decompress(enc)
-                ids.append(did)
-                lens.append(len(raw))
-                cids.append(cid)
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "chain_id": cids,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
+            for (chain, check), rows in cli_groups.items():
+                group = cli_encode(chain, check, [raws[i] for i in rows])
+                for i, blob in zip(rows, group):
+                    blobs[i] = blob
+            return blobs
 
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(
-        kernel, schema
+        return encode, xz_decompress
+
+    def chain_id(did, raw, blob):
+        return did % len(chains)
+
+    return codec_roundtrip_stats(
+        df, make_codec, payload_col, id_col,
+        extra=[("chain_id", "long", chain_id)],
     )
 
 

@@ -16,7 +16,9 @@ OUR encoder's frames are decoded back by libzstd — cross-validating
 both directions against Yann Collet's implementation, the strongest
 form of the repo's stdlib-encodes/spec-decodes pattern.  The Spark
 query kernel prefers libzstd as the fixture encoder and falls back to
-the from-spec encoder when the library is absent (import-try gate).
+the from-spec encoder when the library is absent; every libzstd encode
+in the package goes through the one cached binding behind
+:func:`libzstd_compress`.
 
 Malformed streams raise descriptive ``ValueError`` (the codec-tier
 discipline).  Dictionaries (RFC 8878 §5) are supported on decode —
@@ -29,7 +31,9 @@ libzstd's ``*_usingDict`` APIs.
 
 from __future__ import annotations
 
-from modeltracking_spark.operators.kernel import widen_for_kernel
+import functools
+
+from modeltracking_spark.operators.kernel import codec_roundtrip_stats
 
 _MAGIC = 0xFD2FB528
 
@@ -1325,86 +1329,87 @@ def zstd_compress(data: bytes, checksum: bool = True,
 # ------------------------------------------------------------ spark kernel
 
 
+@functools.cache
+def _libzstd():
+    """The system libzstd via ctypes with its ``argtypes`` declared, or
+    None when the library is absent. Loaded on first use and cached per
+    process, so a Spark kernel that calls it on the executor binds the
+    library there — no ctypes object ever rides in a pickled closure."""
+    import ctypes
+    import ctypes.util
+
+    name = ctypes.util.find_library("zstd")
+    try:
+        lib = ctypes.CDLL(name) if name else None
+    except OSError:
+        lib = None
+    if lib is None:
+        return None
+    size_t, p = ctypes.c_size_t, ctypes.c_char_p
+    lib.ZSTD_compressBound.restype = size_t
+    lib.ZSTD_compressBound.argtypes = [size_t]
+    lib.ZSTD_isError.restype = ctypes.c_uint
+    lib.ZSTD_isError.argtypes = [size_t]
+    lib.ZSTD_createCCtx.restype = ctypes.c_void_p
+    lib.ZSTD_createCCtx.argtypes = []
+    lib.ZSTD_freeCCtx.restype = size_t
+    lib.ZSTD_freeCCtx.argtypes = [ctypes.c_void_p]
+    lib.ZSTD_compress_usingDict.restype = size_t
+    lib.ZSTD_compress_usingDict.argtypes = [
+        ctypes.c_void_p, p, size_t, p, size_t, p, size_t, ctypes.c_int,
+    ]
+    return lib
+
+
+def libzstd_compress(raw: bytes, level: int = 3,
+                     dictionary: bytes | None = None) -> bytes | None:
+    """One zstd frame from libzstd (the REFERENCE encoder), or None when
+    the library is absent so the caller can fall back to the from-spec
+    :func:`zstd_compress`. ``dictionary`` is raw dictionary bytes for
+    ``ZSTD_compress_usingDict``; without one the frame is byte-identical
+    to ``ZSTD_compress``."""
+    lib = _libzstd()
+    if lib is None:
+        return None
+    import ctypes
+
+    bound = lib.ZSTD_compressBound(len(raw))
+    buf = ctypes.create_string_buffer(bound)
+    cctx = lib.ZSTD_createCCtx()
+    if not cctx:
+        raise MemoryError("ZSTD_createCCtx failed")
+    try:
+        n = lib.ZSTD_compress_usingDict(
+            cctx, buf, bound, raw, len(raw),
+            dictionary, len(dictionary or b""), level,
+        )
+    finally:
+        lib.ZSTD_freeCCtx(cctx)
+    if lib.ZSTD_isError(n):
+        raise ValueError("libzstd compress failed")
+    return buf.raw[:n]
+
+
+#: compression levels cycled by doc_id in the round-trip kernels, so
+#: every frame shape libzstd emits meets the from-spec decoder
+_KERNEL_LEVELS = (1, 3, 6, 9)
+
+
 def zstd_roundtrip_stats(
     df,
     payload_col: str = "payload",
     id_col: str = "doc_id",
 ):
-    """Per-row zstd ENCODE -> from-spec DECODE -> stats, Arrow-batched.
-    The encoder is libzstd via ctypes when the library is present (the
-    REFERENCE implementation — every row then cross-validates it
-    against the from-spec decoder, the strongest form of the repo's
-    stdlib-encodes/spec-decodes pattern; the compression level cycles
-    by doc_id to vary table/stream shapes) and the from-spec subset
-    encoder otherwise. Output md5 is encoder-independent (lossless).
-    Narrow map, no shuffle. Output: (id, orig_len, dec_md5, ok)."""
-    import hashlib as _hashlib
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        enc = None
-        try:
-            import ctypes
-            import ctypes.util
-
-            _lib = ctypes.CDLL(ctypes.util.find_library("zstd"))
-            _lib.ZSTD_compressBound.restype = ctypes.c_size_t
-            _lib.ZSTD_compress.restype = ctypes.c_size_t
-            _lib.ZSTD_isError.restype = ctypes.c_uint
-
-            def enc(raw, level):
-                bound = _lib.ZSTD_compressBound(len(raw))
-                buf = ctypes.create_string_buffer(bound)
-                m = _lib.ZSTD_compress(buf, bound, raw, len(raw), level)
-                if _lib.ZSTD_isError(m):
-                    raise ValueError("libzstd compress failed")
-                return buf.raw[:m]
-        except Exception:
-            enc = None
-        for pdf in batches:
-            ids, lens, md5s, oks = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = (text.encode("utf-8") if isinstance(text, str)
-                       else bytes(text))
-                if enc is not None:
-                    blob = enc(raw, [1, 3, 6, 9][int(did) % 4])
-                else:
-                    blob = zstd_compress(raw)
-                dec = zstd_decompress(blob)
-                ids.append(int(did))
-                lens.append(len(raw))
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
-
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(
-        kernel, schema
-    )
+    """Per-row zstd ENCODE -> from-spec DECODE -> stats through
+    :func:`codec_roundtrip_stats`. The encoder is libzstd when the
+    library is present (the REFERENCE implementation — every row then
+    cross-validates it against the from-spec decoder, the strongest
+    form of the repo's stdlib-encodes/spec-decodes pattern; the
+    compression level cycles by doc_id to vary table/stream shapes) and
+    the from-spec subset encoder otherwise. Output md5 is
+    encoder-independent (lossless). Narrow map, no shuffle. Output:
+    (id, orig_len, dec_md5, ok)."""
+    return _zstd_roundtrip(df, None, payload_col, id_col)
 
 
 def zstd_dict_roundtrip_stats(
@@ -1414,95 +1419,40 @@ def zstd_dict_roundtrip_stats(
     id_col: str = "doc_id",
 ):
     """Per-row DICTIONARY zstd encode -> from-spec dict decode (RFC
-    8878 §5), Arrow-batched. The dictionary is a small shared artifact
-    captured by the kernel closure (the broadcast posture — at 100 TB a
-    trained dictionary is a few KB shipped once per executor, which is
-    exactly why dictionary compression exists for short documents).
-    The encoder is libzstd's ZSTD_compress_usingDict when the library
-    is present (level cycled by id so every frame shape meets the
-    from-spec decoder) and the from-spec prefix encoder otherwise; the
-    decoder is ALWAYS :func:`zstd_decompress` with the dictionary —
-    prefix back-references, dict entropy tables, offset history.
-    Narrow map, no shuffle. Output: (id, orig_len, dec_md5, ok)."""
-    import hashlib as _hashlib
+    8878 §5) through :func:`codec_roundtrip_stats`. The dictionary is a
+    small shared artifact captured by the kernel closure (the broadcast
+    posture — at 100 TB a trained dictionary is a few KB shipped once
+    per executor, which is exactly why dictionary compression exists
+    for short documents) and parsed once per partition. The encoder is
+    libzstd's ZSTD_compress_usingDict when the library is present
+    (level cycled by id so every frame shape meets the from-spec
+    decoder) and the from-spec prefix encoder otherwise; the decoder is
+    ALWAYS :func:`zstd_decompress` with the dictionary — prefix
+    back-references, dict entropy tables, offset history. Narrow map,
+    no shuffle. Output: (id, orig_len, dec_md5, ok)."""
+    return _zstd_roundtrip(df, bytes(dictionary), payload_col, id_col)
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("orig_len", LongType()),
-            StructField("dec_md5", StringType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
-    dict_blob = bytes(dictionary)
+def _zstd_roundtrip(df, dict_blob: bytes | None, payload_col: str,
+                    id_col: str):
+    def make_codec():
+        parsed = None if dict_blob is None else zstd_parse_dictionary(dict_blob)
 
-    def kernel(batches):
-        import pandas as pd
-
-        parsed = zstd_parse_dictionary(dict_blob)
-        enc = None
-        try:
-            import ctypes
-            import ctypes.util
-
-            _lib = ctypes.CDLL(ctypes.util.find_library("zstd"))
-            _lib.ZSTD_compressBound.restype = ctypes.c_size_t
-            _lib.ZSTD_isError.restype = ctypes.c_uint
-            _lib.ZSTD_createCCtx.restype = ctypes.c_void_p
-            _lib.ZSTD_compress_usingDict.restype = ctypes.c_size_t
-            _lib.ZSTD_compress_usingDict.argtypes = [
-                ctypes.c_void_p, ctypes.c_char_p, ctypes.c_size_t,
-                ctypes.c_char_p, ctypes.c_size_t, ctypes.c_char_p,
-                ctypes.c_size_t, ctypes.c_int,
-            ]
-            _cctx = _lib.ZSTD_createCCtx()
-
-            def enc(raw, level):
-                bound = _lib.ZSTD_compressBound(len(raw))
-                buf = ctypes.create_string_buffer(bound)
-                m = _lib.ZSTD_compress_usingDict(
-                    _cctx, buf, bound, raw, len(raw),
-                    dict_blob, len(dict_blob), level,
-                )
-                if _lib.ZSTD_isError(m):
-                    raise ValueError("libzstd dict compress failed")
-                return buf.raw[:m]
-        except Exception:
-            enc = None
-        for pdf in batches:
-            ids, lens, md5s, oks = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[payload_col]):
-                raw = (text.encode("utf-8") if isinstance(text, str)
-                       else bytes(text))
-                if enc is not None:
-                    blob = enc(raw, [1, 3, 6, 9][int(did) % 4])
-                else:
+        def encode(ids, raws):
+            out = []
+            for did, raw in zip(ids, raws):
+                blob = libzstd_compress(raw, _KERNEL_LEVELS[did % 4], dict_blob)
+                if blob is None:
                     blob = zstd_compress(raw, dictionary=parsed)
-                dec = zstd_decompress(blob, dictionary=parsed)
-                ids.append(int(did))
-                lens.append(len(raw))
-                md5s.append(_hashlib.md5(dec).hexdigest())
-                oks.append(dec == raw)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "orig_len": lens,
-                    "dec_md5": md5s,
-                    "ok": oks,
-                }
-            )
+                out.append(blob)
+            return out
 
-    return widen_for_kernel(df.select(id_col, payload_col)).mapInPandas(
-        kernel, schema
-    )
+        def decode(blob):
+            return zstd_decompress(blob, dictionary=parsed)
+
+        return encode, decode
+
+    return codec_roundtrip_stats(df, make_codec, payload_col, id_col)
 
 
 # ------------------------------------------------- dictionary writer

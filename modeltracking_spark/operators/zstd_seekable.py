@@ -28,6 +28,7 @@ DataSource with ONE InputPartition PER FRAME.
 from __future__ import annotations
 
 from modeltracking_spark.operators.zstd import (
+    libzstd_compress,
     xxh64,
     zstd_compress,
     zstd_decompress,
@@ -44,33 +45,15 @@ def zstd_seekable_write(batches: list[bytes], checksum: bool = True,
     implementation; ``level_hint`` applies) and by the from-spec
     subset encoder otherwise — either way the seek table is built here
     from the spec."""
-    enc = None
-    try:
-        import ctypes
-        import ctypes.util
-
-        _lib = ctypes.CDLL(ctypes.util.find_library("zstd"))
-        _lib.ZSTD_compressBound.restype = ctypes.c_size_t
-        _lib.ZSTD_compress.restype = ctypes.c_size_t
-        _lib.ZSTD_isError.restype = ctypes.c_uint
-
-        def enc(raw):
-            bound = _lib.ZSTD_compressBound(len(raw))
-            buf = ctypes.create_string_buffer(bound)
-            n = _lib.ZSTD_compress(buf, bound, raw, len(raw), level_hint)
-            if _lib.ZSTD_isError(n):
-                raise ValueError("libzstd compress failed")
-            return buf.raw[:n]
-    except Exception:
-        enc = None
-
     out = bytearray()
     entries = []
     for raw in batches:
         raw = bytes(raw)
         if len(raw) >= 1 << 31 or not raw:
             raise ValueError("seekable frame payload must be 1..2^31-1 B")
-        frame = enc(raw) if enc is not None else zstd_compress(raw)
+        frame = libzstd_compress(raw, level_hint)
+        if frame is None:
+            frame = zstd_compress(raw)
         entries.append((len(frame), len(raw),
                         xxh64(raw) & 0xFFFFFFFF))
         out += frame

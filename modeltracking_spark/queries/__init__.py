@@ -113,10 +113,11 @@ PRIORITY: tuple[str, ...] = (
 #: queries whose semantics/plan changed THIS round: the staleness lint
 #: in tools/check_queries.py --window treats them as never-attested so
 #: their head-of-window placement does not trip the stalest-first
-#: invariant (their old attestation predates the change).  Round 16:
-#: empty — an optimization round: every change is plan-shape or
-#: kernel-level with the same arithmetic, and the full 269-query
-#: exact sweep at sf0.01 was re-run green on the final tree.
+#: invariant (their old attestation predates the change).  Empty: the
+#: codec round-trip kernels moved onto one shared harness
+#: (operators/kernel.py ``codec_roundtrip_stats``) — a change of
+#: structure, not arithmetic — and the codec queries' exact oracle
+#: sweep at sf0.01 was re-run green on the final tree.
 REATTEST: tuple[str, ...] = ()
 
 #: observed driver correctness cap (CORRECTNESS_r03 scored exactly 50)

@@ -2392,55 +2392,33 @@ def zlib_fdict_roundtrip_docs(spark: SparkSession,
     records. DICTID gating, misuse rejects, and corruption fuzz live
     in tests/test_inflate.py + tests/test_fuzz_codecs.py. Narrow Arrow
     map, no shuffle."""
-    import zlib as _check  # noqa: F401  (stdlib presence is the point)
+    from modeltracking_spark.operators.kernel import codec_roundtrip_stats
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from modeltracking_spark.operators.kernel import widen_for_kernel
-
-    out_schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("orig_len", LongType()),
-        StructField("dec_md5", StringType()),
-        StructField("fdict_set", BooleanType()),
-        StructField("ok", BooleanType()),
-    ])
-
-    def kernel(batches):
-        import hashlib
+    def make_codec():
         import zlib
-
-        import pandas as pd
 
         from modeltracking_spark.operators.inflate import zlib_decompress
 
-        for pdf in batches:
-            ids, lens, md5s, flags, oks = [], [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                did = int(did)
+        def encode(ids, raws):
+            out = []
+            for did, raw in zip(ids, raws):
                 co = zlib.compressobj(1 + did % 9, zlib.DEFLATED, 15,
                                       zdict=_FDICT_DICT)
-                blob = co.compress(raw) + co.flush()
-                dec = zlib_decompress(blob, zdict=_FDICT_DICT)
-                ids.append(did)
-                lens.append(len(raw))
-                md5s.append(hashlib.md5(dec).hexdigest())
-                flags.append(bool(blob[1] & 0x20))
-                oks.append(dec == raw)
-            yield pd.DataFrame({
-                "doc_id": ids, "orig_len": lens, "dec_md5": md5s,
-                "fdict_set": flags, "ok": oks,
-            })
+                out.append(co.compress(raw) + co.flush())
+            return out
 
-    docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    return widen_for_kernel(docs).mapInPandas(kernel, out_schema)
+        def decode(blob):
+            return zlib_decompress(blob, zdict=_FDICT_DICT)
+
+        return encode, decode
+
+    def fdict_set(did, raw, blob):
+        return bool(blob[1] & 0x20)
+
+    return codec_roundtrip_stats(
+        T(spark, sf_dir, "documents"), make_codec, payload_col="text",
+        extra=[("fdict_set", "boolean", fdict_set)],
+    ).select("doc_id", "orig_len", "dec_md5", "fdict_set", "ok")
 
 
 @query(

@@ -545,3 +545,44 @@ def test_robust_outlier_stats_hand_case(spark):
     b = out["b"]
     assert (b["median_v"], b["mad_v"]) == (7, 0)
     assert b["n_outliers"] == 1  # degenerate arm: any nonzero deviation
+
+
+def test_codec_roundtrip_harness_contract(spark):
+    """codec_roundtrip_stats: str and bytes payloads, extra columns
+    between orig_len and dec_md5, and ok=False (not an exception) when
+    the decoder returns different bytes."""
+    import hashlib
+
+    from modeltracking_spark.operators.kernel import codec_roundtrip_stats
+
+    df = spark.createDataFrame(
+        [(1, "abc"), (2, "hello"), (3, "")], "doc_id long, payload string"
+    )
+
+    def make_codec():
+        def encode(ids, raws):
+            return [raw[::-1] for raw in raws]
+
+        def decode(blob):
+            return b"x" if blob == b"olleh" else blob[::-1]
+
+        return encode, decode
+
+    out = codec_roundtrip_stats(
+        df, make_codec,
+        extra=[("blob_len", "long", lambda did, raw, blob: len(blob)),
+               ("odd", "boolean", lambda did, raw, blob: did % 2 == 1)],
+    )
+    assert out.columns == ["doc_id", "orig_len", "blob_len", "odd",
+                           "dec_md5", "ok"]
+    rows = {r["doc_id"]: r for r in out.collect()}
+    assert rows[1]["ok"] and rows[3]["ok"] and not rows[2]["ok"]
+    assert rows[2]["dec_md5"] == hashlib.md5(b"x").hexdigest()
+    assert [rows[i]["orig_len"] for i in (1, 2, 3)] == [3, 5, 0]
+    assert rows[1]["odd"] and not rows[2]["odd"]
+
+    bin_df = spark.createDataFrame(
+        [(7, bytearray(b"\x00\xff"))], "doc_id long, payload binary"
+    )
+    (r,) = codec_roundtrip_stats(bin_df, make_codec).collect()
+    assert (r["orig_len"], r["ok"]) == (2, True)
