@@ -117,10 +117,11 @@ def _filter_rows(raw, bpp: int) -> bytes:
         else:  # Paeth
             left = np.concatenate([np.zeros(bpp, np.int16), row[:-bpp]])
             upleft = np.concatenate([np.zeros(bpp, np.int16), prev[:-bpp]])
-            pred = np.fromiter(
-                (_paeth(int(l), int(u), int(ul))
-                 for l, u, ul in zip(left, prev, upleft)),
-                dtype=np.int16, count=stride,
+            # _paeth over whole rows: same ties, same order of choices
+            p = left + prev - upleft
+            pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - upleft)
+            pred = np.where(
+                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, upleft)
             )
             filt = (row - pred) % 256
         out.append(ft)

@@ -55,31 +55,23 @@ def track_map_frame(track: DataFrame):
     )
 
 
-def render_profile_png(profile: DataFrame, track: DataFrame, out_path: str) -> str:
-    """Render the profile panel to a real PNG (the ``fig_test.png``
-    twin, ``trackplot_hycom.py:266-279``) — NO plotting library: the
-    plot-ready frame is rasterized by :mod:`modeltracking_spark.figure`
-    (colormapped cells + labelled colorbar) and encoded by the repo's
-    own from-spec PNG encoder. Deterministic: same inputs, same bytes.
-    """
+def profile_panel(profile: DataFrame, track: DataFrame):
+    """The profile panel as an RGB uint8 canvas (``trackplot_hycom.py:
+    266-279``): the plot-ready frame rasterized by
+    :mod:`modeltracking_spark.figure` — colormapped cells plus a
+    labelled colorbar."""
     from modeltracking_spark import figure
 
     pdf = profile_plot_frame(profile, track)
-    img = figure.render_profile_panel(figure.profile_matrix(pdf))
-    return figure.write_png(img, out_path)
+    return figure.render_profile_panel(figure.profile_matrix(pdf))
 
 
-def render_track_map_png(
-    track: DataFrame,
-    grid: DataFrame,
-    out_path: str,
-    variable: str = "water_temp",
-) -> str:
-    """Render the track-over-field map panel (``trackplot_hycom.py:
-    281-303``): surface slice of the grid at its first time step as the
-    colormapped background, the track as a polyline + markers. The
-    ONLY driver-sized collects are the surface slice (n_lat x n_lon)
-    and the track itself."""
+def track_map_panel(track: DataFrame, grid: DataFrame, variable: str = "water_temp"):
+    """The track-over-field map panel as an RGB uint8 canvas
+    (``trackplot_hycom.py:281-303``): surface slice of the grid at its
+    first time step as the colormapped background, the track as a
+    polyline + markers. The ONLY driver-sized collects are the surface
+    slice (n_lat x n_lon) and the track itself."""
     import numpy as np
 
     from modeltracking_spark import figure
@@ -111,35 +103,46 @@ def render_track_map_png(
             (pdf["lon"].to_numpy() - GRID_LON0) / GRID_LON_STEP,
         ]
     )
-    img = figure.render_track_map_panel(field, track_rc)
-    return figure.write_png(img, out_path)
+    return figure.render_track_map_panel(field, track_rc)
+
+
+def render_profile_png(profile: DataFrame, track: DataFrame, out_path: str) -> str:
+    """Render the profile panel to a real PNG (the ``fig_test.png``
+    twin) — NO plotting library: :func:`profile_panel` encoded by the
+    repo's own from-spec PNG encoder. Deterministic: same inputs, same
+    bytes."""
+    from modeltracking_spark import figure
+
+    return figure.write_png(profile_panel(profile, track), out_path)
+
+
+def render_track_map_png(
+    track: DataFrame,
+    grid: DataFrame,
+    out_path: str,
+    variable: str = "water_temp",
+) -> str:
+    """Render :func:`track_map_panel` to a PNG."""
+    from modeltracking_spark import figure
+
+    return figure.write_png(track_map_panel(track, grid, variable), out_path)
 
 
 def render_figure_png(
     profile: DataFrame, track: DataFrame, grid: DataFrame, out_path: str
 ) -> str:
     """The full two-panel ``fig_test.png`` twin (``trackplot_hycom.py:
-    266-305``): profile panel stacked over the track map, one PNG."""
+    266-305``): profile panel stacked over the track map, each padded
+    with background white to the wider width, encoded once."""
     import numpy as np
 
     from modeltracking_spark import figure
 
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        p1 = render_profile_png(profile, track, os.path.join(td, "p.png"))
-        p2 = render_track_map_png(track, grid, os.path.join(td, "m.png"))
-        from modeltracking_spark.operators.png import decode_png
-
-        imgs = []
-        for p in (p1, p2):
-            with open(p, "rb") as fh:
-                imgs.append(decode_png(fh.read()))
-    w = max(i.shape[1] for i in imgs)
+    panels = [profile_panel(profile, track), track_map_panel(track, grid)]
+    w = max(p.shape[1] for p in panels)
     padded = []
-    for i in imgs:
-        pad = np.full((i.shape[0], w, 3), 255, dtype=np.uint8)
-        pad[:, : i.shape[1]] = i
+    for p in panels:
+        pad = np.full((p.shape[0], w, 3), 255, dtype=np.uint8)
+        pad[:, : p.shape[1]] = p
         padded.append(pad)
     return figure.write_png(np.concatenate(padded, axis=0), out_path)

@@ -56,7 +56,18 @@ def ensure_pkg_on_workers(spark: SparkSession) -> None:
     mapInPandas decode, pandas UDFs) cloudpickle functions BY REFERENCE
     to this package — workers must be able to import it. When the
     harness runs with a cwd outside the repo and no PYTHONPATH, they
-    can't; a one-time ~50 KB zip per SparkContext closes that hole."""
+    can't; a one-time ~50 KB zip per SparkContext closes that hole.
+
+    Importing the package on a worker also installs the zipimport guard
+    of ``modeltracking_spark/__init__.py``. Every Python-worker task
+    calls ``importlib.invalidate_caches()``, and before CPython 3.13 that
+    re-reads the directory of every zip on the worker's path — this zip,
+    ``pyspark.zip`` and the spark-core jar — at 0.2-0.3 s of CPU a task.
+    The guard lives in the package rather than in a session conf or a
+    custom worker module because the correctness harness passes in its
+    own session: the one thing sure to reach every worker that runs our
+    kernels and DataSources is the import of this package when the
+    worker unpickles them."""
     try:
         sc = spark.sparkContext
     except Exception:

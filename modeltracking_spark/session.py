@@ -50,7 +50,9 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # testdata events.parquet stores TIMESTAMP(NANOS); see schemas.py
+        # the testdata ships events.ts as timestamp[us] (schemas.py
+        # probes the footer); this legacy nanos setting stays only until
+        # ROADMAP direction 4 removes the global session conf
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

@@ -1,7 +1,8 @@
 """S8 figure sink, from-spec: the numpy rasterizer + in-repo PNG
 encoder render real, deterministic figure bytes with no plotting
 library. Pixel-level checks recompute the expected colors
-independently; determinism is pinned by double-render equality."""
+independently; determinism is pinned by double-render equality and the
+full figure by its md5."""
 
 import hashlib
 
@@ -127,3 +128,14 @@ def test_render_figure_png_stacks_both_panels(spark, profile, tmp_path):
     assert img.shape[1] == max(p.shape[1], m.shape[1])
     # top-left corner of the stack is the profile panel verbatim
     assert (img[: p.shape[0], : p.shape[1]] == p).all()
+
+
+def test_render_figure_png_bytes_pinned(spark, profile, tmp_path):
+    """The exact figure bytes: building the stack in memory (no panel
+    PNG round trip) and the vectorized Paeth filter leave every byte of
+    the encoded figure as it was."""
+    track = synthetic_track(spark)
+    grid = hycom_grid_fixture(spark)
+    path = render_figure_png(profile, track, grid, str(tmp_path / "f.png"))
+    digest = hashlib.md5(open(path, "rb").read()).hexdigest()
+    assert digest == "21188d0cd93b2506dff0c8752ef80a59"

@@ -2,6 +2,7 @@
 approx_count_distinct sanity, sal..."""
 
 import os
+import sys
 
 import pyspark.sql.functions as F
 import pytest
@@ -586,3 +587,120 @@ def test_codec_roundtrip_harness_contract(spark):
     )
     (r,) = codec_roundtrip_stats(bin_df, make_codec).collect()
     assert (r["orig_len"], r["ok"]) == (2, True)
+
+
+def _write_zip(path, modules):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="3.13 zipimport only drops its cache entry; no guard installed",
+)
+def test_zipimport_guard_skips_unchanged_archive(tmp_path, monkeypatch):
+    """With the package imported, importlib.invalidate_caches() reads an
+    unchanged archive's directory no more; a rewritten archive is read
+    again and its new module imports."""
+    import importlib
+    import zipimport
+
+    import modeltracking_spark  # noqa: F401  (installs the guard)
+
+    archive = str(tmp_path / "guarded.zip")
+    _write_zip(archive, {"mts_guard_a": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda p: reads.append(p) or real(p)
+    )
+    try:
+        import mts_guard_a
+
+        assert mts_guard_a.X == 1
+        importlib.invalidate_caches()  # first guarded pass stamps the archive
+        reads.clear()
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert archive not in reads
+
+        _write_zip(archive, {"mts_guard_a": "X = 1\n", "mts_guard_b": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        import mts_guard_b
+
+        assert mts_guard_b.Y == 2
+    finally:
+        for name in ("mts_guard_a", "mts_guard_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_zipimport_guard_noop_from_python_313(monkeypatch):
+    import zipimport
+
+    from modeltracking_spark import _guard_zipimport_invalidate
+
+    current = zipimport.zipimporter.invalidate_caches
+    stock = getattr(current, "__wrapped__", current)
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stock)
+    assert _guard_zipimport_invalidate((3, 13, 0)) is False
+    assert zipimport.zipimporter.invalidate_caches is stock
+    assert _guard_zipimport_invalidate(sys.version_info) is (
+        sys.version_info < (3, 13)
+    )
+
+
+def test_zipimport_guard_installed_in_every_task(spark):
+    """Every Python-worker task that unpickles a closure over the package
+    runs with the guard, and a repeated invalidate_caches() in the task
+    re-reads none of the worker's zip archives."""
+    import pandas as pd
+
+    import modeltracking_spark as pkg
+
+    def report(batches):
+        import importlib
+        import os
+        import zipimport
+
+        for _ in batches:
+            pass
+        installed = getattr(
+            zipimport.zipimporter.invalidate_caches, "_skips_unchanged", False
+        )
+        n_zips = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        importlib.invalidate_caches()
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        yield pd.DataFrame(
+            {"pkg": [pkg.__name__], "pid": [os.getpid()],
+             "installed": [installed], "zips": [n_zips],
+             "rereads": [len(reads)]}
+        )
+
+    rows = (
+        spark.range(0, 8, numPartitions=8)
+        .mapInPandas(report, "pkg string, pid long, installed boolean, "
+                             "zips long, rereads long")
+        .collect()
+    )
+    assert len(rows) == 8
+    guarded = sys.version_info < (3, 13)
+    assert all(r["installed"] is guarded for r in rows)
+    assert all(r["zips"] > 0 for r in rows)
+    if guarded:
+        assert all(r["rereads"] == 0 for r in rows)

@@ -131,6 +131,34 @@ def test_golden_bytes_deterministic():
     assert b1[:8] == _SIG and b1[-12:-8] == struct.pack(">I", 0)[:3] + b"\x00"
 
 
+@settings(max_examples=40, deadline=None)
+@given(st.data())
+def test_paeth_filter_rows_match_scalar_predictor(data):
+    """The whole-row Paeth filter equals the per-byte _paeth reference,
+    ties included (small value sets make equal distances common)."""
+    from modeltracking_spark.operators.png import _filter_rows, _paeth
+
+    bpp = data.draw(st.sampled_from([1, 2, 3, 4, 6, 8]))
+    stride = bpp * data.draw(st.integers(1, 12))
+    vals = data.draw(st.sampled_from(
+        [[0, 255], [7, 8], [0, 1, 3], list(range(6)), list(range(256))]
+    ))
+    raw = np.array(
+        data.draw(st.lists(st.sampled_from(vals), min_size=10 * stride,
+                           max_size=10 * stride)),
+        dtype=np.int16,
+    ).reshape(10, stride)
+    out = np.frombuffer(_filter_rows(raw, bpp), np.uint8).reshape(10, stride + 1)
+    for y in (4, 9):  # filter type cycles y % 5; 4 is Paeth
+        row, prev = raw[y].tolist(), raw[y - 1].tolist()
+        expect = [
+            (row[i] - _paeth(row[i - bpp] if i >= bpp else 0, prev[i],
+                             prev[i - bpp] if i >= bpp else 0)) % 256
+            for i in range(stride)
+        ]
+        assert out[y, 0] == 4 and out[y, 1:].tolist() == expect
+
+
 def test_real_decode_in_spark(spark):
     """decode_image_features routes \\x89PNG payloads through the real
     codec inside mapInPandas; stats match a local numpy decode."""
