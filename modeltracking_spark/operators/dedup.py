@@ -795,19 +795,24 @@ def simhash64(doc_tokens: DataFrame) -> DataFrame:
     pairs with small Hamming distance (:func:`simhash_neardup_pairs`).
     Output: (id, simhash) with simhash as bigint.
 
-    **Narrow form (one shuffle, codegen only).** Each bit's vote count
-    is a map-side-combinable SUM of ``shiftright(h, j) & 1`` — 63 sum
-    columns plus the token count ride the only Exchange (a fixed
-    ~512 bytes/doc partial, *smaller* than shipping the token-hash list
-    for any document beyond ~64 tokens), and the fingerprint assembles
-    from the sums in one codegen projection. The r15 form collected the
-    hash list per doc and folded the votes in an interpreted
-    higher-order ``aggregate`` lambda — 63 x tokens interpreted steps
-    per document, pinned to however few partitions AQE coalesced the
-    post-shuffle read to (measured: the whole fold on ONE task at
-    sf0.1). Same integer votes, same threshold ``2c > n``, bit-identical
-    fingerprints (plan asserted ≤1 Exchange in
-    tests/test_scale_plans.py).
+    **Narrow form (one shuffle, codegen only).** The vote counts are
+    map-side-combinable SUMs that ride the only Exchange (plan asserted
+    ≤1 Exchange in tests/test_scale_plans.py), and the fingerprint
+    assembles from them in one codegen projection.
+
+    **Two votes per sum.** ``sum(shiftright(h, j) & (2^32 + 1))`` counts
+    bit j of the token hash in the low 32 bits of one bigint and bit
+    j+32 in the high 32 bits, so 32 sums carry all 63 votes (the high
+    lane of j = 31 is bit 63, always 0 because h < 2^62). No lane can
+    carry: each lane counts at most n tokens, a document has fewer than
+    2^31 tokens, so the low lane stays below 2^32 and the high lane
+    below 2^31 · 2^32 = 2^63, inside a signed bigint. The vote of bit j
+    is then ``s & 0xFFFFFFFF`` or ``s >> 32``; same integer votes and
+    threshold ``2c > n`` as one sum per bit, bit-identical fingerprints.
+    Each sum and the fingerprint is one SQL expression string: building
+    the frame sends about 340 py4j commands, where the Column-API form
+    of 63 sums and a 63-term ``when`` chain sent about 8,300, and the
+    generated aggregate keeps 33 buffers instead of 64.
     """
     # affine-rehash the token id into 64 bits (two 31-bit halves);
     # reduce mod p first so the products stay within int64 for 60-bit ids
@@ -815,20 +820,18 @@ def simhash64(doc_tokens: DataFrame) -> DataFrame:
     h = (t * F.lit(0x9E3779B1) + F.lit(0x85EBCA77)) % F.lit(MINHASH_PRIME)
     h2 = (t * F.lit(0xC2B2AE35) + F.lit(0x27D4EB2F)) % F.lit(MINHASH_PRIME)
     hashed = doc_tokens.withColumn("__h64", (h.cast("bigint") * F.lit(2147483648)) + h2)
+    lanes = (1 << 32) | 1
     per_doc = hashed.groupBy("id").agg(
         F.count(F.lit(1)).alias("__n"),
-        *[
-            F.sum(F.shiftright("__h64", j).bitwiseAND(F.lit(1))).alias(f"__c{j}")
-            for j in range(63)
-        ],
+        *[F.expr(f"sum(shiftright(__h64, {j}) & {lanes}) AS __s{j}")
+          for j in range(32)],
     )
-    fingerprint = None
-    for j in range(63):
-        term = F.when(
-            F.col(f"__c{j}") * 2 > F.col("__n"), F.lit(1 << j)
-        ).otherwise(F.lit(0))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return per_doc.select("id", fingerprint.cast("bigint").alias("simhash"))
+    votes = ([f"(__s{j} & {(1 << 32) - 1})" for j in range(32)]
+             + [f"shiftright(__s{j}, 32)" for j in range(31)])
+    fingerprint = " | ".join(
+        f"IF({v} * 2 > __n, {1 << j}L, 0L)" for j, v in enumerate(votes)
+    )
+    return per_doc.select("id", F.expr(f"{fingerprint} AS simhash"))
 
 
 #: default band split of the 63-bit fingerprint: 4 bands of ~16 bits.

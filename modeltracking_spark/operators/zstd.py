@@ -202,9 +202,22 @@ class _FwdBits:
 # ----------------------------------------------------------------- FSE
 
 def fse_build_decode_table(norm: list[int], accuracy_log: int):
-    """Normalized counts -> decode table [(symbol, nbits, baseline)]
+    """Normalized counts -> decode table ((symbol, nbits, baseline), ...)
     per RFC 8878 4.1.1: 'less than 1' (-1) symbols fill cells from the
-    top; positive counts spread with step (S/2 + S/8 + 3) mod S."""
+    top; positive counts spread with step (S/2 + S/8 + 3) mod S.
+
+    Memoized on ``(tuple(norm), accuracy_log)``: every frame in
+    Predefined_Mode asks for the same three tables, which a per-frame
+    build would spread again each time. The table is an immutable tuple
+    because every caller shares it; a description that raises
+    ``ValueError`` is never cached, so it raises on every call."""
+    return _fse_decode_table(tuple(norm), accuracy_log)
+
+
+# 128 distinct tables per process: one at accuracy log 9 is about 43 KB,
+# so the cache stays under ~6 MB whatever the input
+@functools.lru_cache(maxsize=128)
+def _fse_decode_table(norm: tuple[int, ...], accuracy_log: int):
     size = 1 << accuracy_log
     if sum(abs(c) for c in norm if c != 0) > size:
         raise ValueError("FSE normalized counts exceed table size")
@@ -238,7 +251,7 @@ def fse_build_decode_table(norm: list[int], accuracy_log: int):
         nbits = accuracy_log - (ns.bit_length() - 1)
         baseline = (ns << nbits) - size
         table.append((s, nbits, baseline))
-    return table
+    return tuple(table)
 
 
 def fse_read_ncount(data: bytes, pos: int, max_symbol: int,
@@ -293,6 +306,11 @@ def fse_read_ncount(data: bytes, pos: int, max_symbol: int,
 
 # ------------------------------------------------------------- Huffman
 
+#: zero bits below an FSE-compressed Huffman weights stream read as one
+#: int; more than the 18 bits its decode loop can read past the end
+_WEIGHTS_PAD = 32
+
+
 def huf_read_weights(data: bytes, pos: int):
     """Huffman tree description -> (weights list incl. the implied
     last one, tableLog, next byte position). headerByte >= 128: direct
@@ -319,23 +337,37 @@ def huf_read_weights(data: bytes, pos: int):
         pos += hb
         norm, al, off = fse_read_ncount(blob, 0, 255, 6)
         table = fse_build_decode_table(norm, al)
-        bb = _BackBits(blob[off:])
-        s1 = bb.read(al)
-        s2 = bb.read(al)
+        # The stream is under 128 bytes, so it is read as ONE int (the
+        # windowed _BackBits serves the long streams), shifted up by
+        # _WEIGHTS_PAD zero bits: a read past the stream end yields the
+        # same zero padding as _BackBits, and overflow is
+        # rem < _WEIGHTS_PAD. At most 3 reads of <= 6 bits pass the end
+        # (the two initial states, then the read whose overflow ends
+        # the loop).
+        stream = blob[off:]
+        rem = _BackBits(stream).remaining + _WEIGHTS_PAD  # checks sentinel
+        bits = int.from_bytes(stream, "little") << _WEIGHTS_PAD
+        mask = (1 << al) - 1
+        rem -= al
+        s1 = (bits >> rem) & mask
+        rem -= al
+        s2 = (bits >> rem) & mask
         weights = []
         while True:
             if len(weights) > 254:
                 raise ValueError("Huffman weights stream does not end")
             sym, nb, base = table[s1]
             weights.append(sym)
-            s1 = base + bb.read(nb)
-            if bb.overflowed:
+            rem -= nb
+            s1 = base + ((bits >> rem) & ((1 << nb) - 1))
+            if rem < _WEIGHTS_PAD:
                 weights.append(table[s2][0])
                 break
             sym, nb, base = table[s2]
             weights.append(sym)
-            s2 = base + bb.read(nb)
-            if bb.overflowed:
+            rem -= nb
+            s2 = base + ((bits >> rem) & ((1 << nb) - 1))
+            if rem < _WEIGHTS_PAD:
                 weights.append(table[s1][0])
                 break
     # the LAST weight is implied: tableLog = highbit(sum)+1, and the
@@ -357,44 +389,57 @@ def huf_build_decode_table(weights: list[int], table_log: int):
     """Canonical table: symbols in natural order, each weight-w symbol
     owning 2^(w-1) consecutive cells, lower weights (longer codes)
     first. Cell = (symbol, nbits = tableLog + 1 - w)."""
-    size = 1 << table_log
-    rank_count = [0] * (table_log + 2)
-    for w in weights:
+    by_weight: list[list[int]] = [[] for _ in range(table_log + 2)]
+    for sym, w in enumerate(weights):
         if w > table_log + 1:
             raise ValueError("Huffman weight exceeds table log")
-        rank_count[w] += 1
-    rank_start = [0] * (table_log + 2)
-    start = 0
-    for w in range(1, table_log + 2):
-        rank_start[w] = start
-        start += rank_count[w] << (w - 1)
-    if start != size:
+        by_weight[w].append(sym)
+    if sum(len(by_weight[w]) << (w - 1)
+           for w in range(1, table_log + 2)) != 1 << table_log:
         raise ValueError("Huffman weights do not fill the table")
-    table = [(0, 0)] * size
-    for sym, w in enumerate(weights):
-        if w == 0:
-            continue
-        length = 1 << (w - 1)
-        base = rank_start[w]
+    table = []
+    for w in range(1, table_log + 2):
+        cells = 1 << (w - 1)
         nb = table_log + 1 - w
-        for i in range(base, base + length):
-            table[i] = (sym, nb)
-        rank_start[w] += length
+        for sym in by_weight[w]:
+            table += [(sym, nb)] * cells
     return table
 
 
 def _huf_decode_stream(blob: bytes, table, table_log: int,
                        n_out: int) -> bytearray:
+    # Bit fields are read inline against local (buf, rem), as in
+    # _decode_sequences: one table_log-bit window per symbol serves both
+    # the peek and the consume. Past the end the window is zero-padded
+    # and the overrun counted, exactly as _BackBits.peek/read do.
     bb = _BackBits(blob)
+    buf = bb._data
+    rem = bb.remaining
+    past_end = 0
+    mask = (1 << table_log) - 1
+    from_bytes = int.from_bytes
     out = bytearray()
+    append = out.append
     for _ in range(n_out):
-        idx = bb.peek(table_log)
+        if rem >= table_log:
+            lo = rem - table_log
+            idx = (from_bytes(buf[lo >> 3:((rem - 1) >> 3) + 1], "little")
+                   >> (lo & 7)) & mask
+        elif rem:
+            idx = ((from_bytes(buf[:((rem - 1) >> 3) + 1], "little")
+                    & ((1 << rem) - 1)) << (table_log - rem))
+        else:
+            idx = 0
         sym, nb = table[idx]
         if nb == 0:
             raise ValueError("invalid Huffman code cell")
-        bb.read(nb)
-        out.append(sym)
-    if bb.remaining != 0 or bb.past_end > 0:
+        if nb <= rem:
+            rem -= nb
+        else:
+            past_end += nb - rem
+            rem = 0
+        append(sym)
+    if rem != 0 or past_end > 0:
         raise ValueError("Huffman literal stream not fully consumed")
     return out
 

@@ -148,6 +148,12 @@ def stateful_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_MB", "32"))
     floor = max(1, spark.sparkContext.defaultParallelism // 2)
     n_state = max(floor, min(math.ceil(n_bytes / (per_part << 20)), 2048))
+    # WARNING: not safe under concurrency. This set-and-restore writes
+    # the SHARED session conf, so any query another thread plans or
+    # starts on the same session between the set and the restore sees
+    # n_state shuffle partitions, and two overlapping calls can leave
+    # the session at one stream's value rather than the original. Run
+    # it alone on its session.
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
     try:

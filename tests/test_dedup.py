@@ -3,9 +3,11 @@ SimHash invariance (SURVEY.md §5.3 property tests)."""
 
 from itertools import combinations
 
+import numpy as np
 import pyspark.sql.functions as F
 
 from modeltracking_spark.operators.dedup import (
+    MINHASH_PRIME,
     dedup_rows,
     exact_dedup,
     jaccard_pairs,
@@ -73,6 +75,53 @@ def test_simhash_identity_and_divergence(spark):
     assert sh[1] == sh[3]                     # identical docs -> same hash
     assert sh[1] != sh[6]                     # unrelated docs -> different
     assert all(v >= 0 for v in sh.values())   # 63-bit => non-negative
+
+
+def _h64(token_ids):
+    """The 62-bit token hash simhash64 votes on, in numpy uint64."""
+    t = np.asarray(token_ids, dtype=np.uint64) % np.uint64(MINHASH_PRIME)
+    h = (t * np.uint64(0x9E3779B1) + np.uint64(0x85EBCA77)) % np.uint64(MINHASH_PRIME)
+    h2 = (t * np.uint64(0xC2B2AE35) + np.uint64(0x27D4EB2F)) % np.uint64(MINHASH_PRIME)
+    return h * np.uint64(1 << 31) + h2
+
+
+def _simhash_reference(rows):
+    """SimHash by the definition: bit j set iff 2·Σ bit_j(h) > n. Also
+    returns how many (doc, bit) votes were exact ties 2c == n."""
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    h64 = _h64([r[1] for r in rows])
+    bits = ((h64[:, None] >> np.arange(63, dtype=np.uint64)) & np.uint64(1)).astype(np.int64)
+    out, ties = {}, 0
+    for doc in np.unique(ids):
+        sel = ids == doc
+        n = int(sel.sum())
+        c = bits[sel].sum(axis=0)
+        ties += int((2 * c == n).sum())
+        out[int(doc)] = sum(1 << j for j in range(63) if 2 * c[j] > n)
+    return out, ties
+
+
+def test_simhash_lane_packed_matches_definition(spark):
+    # 32 two-lane sums carry the 63 votes: bits 31 and 32 sit on either
+    # side of the lane boundary, bit 61 in the high lane of sum 29
+    rng = np.random.default_rng(42)
+    rows = [(int(d), int(t)) for d in range(40)
+            for t in rng.integers(0, 1 << 60, size=int(rng.integers(1, 80)))]
+    rows += [(40, int(t)) for t in rng.integers(0, 1 << 60, size=3000)]
+    small = _h64(range(64))
+    lane_edge = [next(t for t in range(64) if int(small[t]) >> b & 1)
+                 for b in (31, 32, 61)]
+    rows += [(100 + i, t) for i, t in enumerate(lane_edge)]  # one token
+    rows += [(200, 1), (200, 2)]                             # 2c == n ties
+    rows += [(300, t) for t in lane_edge * 3 + [7]]          # edges vote
+    want, ties = _simhash_reference(rows)
+    assert ties > 0
+    assert int(_h64([t for _, t in rows]).max()) < 1 << 62
+    df = spark.createDataFrame(rows, "id long, token_id long")
+    got = {r["id"]: r["simhash"] for r in simhash64(df).collect()}
+    assert got == want
+    # a one-token document's fingerprint is its token's hash
+    assert [got[100 + i] for i in range(3)] == [int(small[t]) for t in lane_edge]
 
 
 def test_exact_dedup_and_survivors(spark):

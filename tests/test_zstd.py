@@ -15,6 +15,7 @@ from modeltracking_spark.operators.zstd import (
     _LL_DEFAULT,
     _ML_DEFAULT,
     _OF_DEFAULT,
+    _fse_decode_table,
     fse_build_decode_table,
     fse_build_encode_table,
     xxh64,
@@ -170,6 +171,51 @@ def test_predefined_fse_table_invariants():
         # every transition lands inside the table
         for sym, nb, base in table:
             assert 0 <= base and base + (1 << nb) <= size
+
+
+def test_fse_decode_table_is_immutable_and_cached():
+    norm, al = _LL_DEFAULT
+    table = fse_build_decode_table(norm, al)
+    with pytest.raises(TypeError):
+        table[0] = (0, 0, 0)
+    assert fse_build_decode_table(list(norm), al) is table
+    assert _fse_decode_table.cache_info().maxsize is not None
+
+
+def test_fse_decode_table_error_is_not_cached():
+    bad = [40, 1, 1]  # 42 cells in a 32-cell table
+    for _ in range(2):
+        with pytest.raises(ValueError, match="exceed table size"):
+            fse_build_decode_table(bad, 5)
+
+
+@needs_lib
+@needs_cli
+def test_interleaved_frames_share_decoder_tables(tmp_path, monkeypatch):
+    """Frames of every kernel level and dictionary frames (whose
+    sequences use Repeat_Mode tables) decode byte-identically when
+    interleaved in one process, with the table cache warm from the
+    other kinds."""
+    import modeltracking_spark.operators.zstd as zmod
+
+    dblob = _trained_dict(tmp_path)
+    jobs = [(_ref_compress(raw, level), None, raw)
+            for raw in _payloads() for level in (1, 3, 6, 9)]
+    jobs += [(zmod.libzstd_compress(raw, level, dblob), dblob, raw)
+             for raw in _dict_payloads() for level in (1, 3, 6, 9)]
+    random.Random(5).shuffle(jobs)
+    modes = []
+    read_table = zmod._read_seq_table
+
+    def spy(kind, mode, data, pos, prev):
+        modes.append(mode)
+        return read_table(kind, mode, data, pos, prev)
+
+    monkeypatch.setattr(zmod, "_read_seq_table", spy)
+    for blob, dictionary, raw in jobs + jobs[::-1]:
+        assert zstd_decompress(blob, dictionary=dictionary) == raw
+    assert 3 in modes  # Repeat_Mode
+    assert _fse_decode_table.cache_info().hits > 0
 
 
 def test_fse_encode_decode_state_machine_roundtrip():
@@ -395,17 +441,8 @@ def test_raw_dict_cross_validation_both_directions():
         assert zstd_decompress(cbuf.raw[:m], dictionary=_RAW_DICT) == p
 
 
-@needs_cli
-def test_trained_structured_dict_decode_vs_libzstd(tmp_path):
-    """zstd --train builds a REAL structured dictionary (magic,
-    entropy tables, offset history, content); libzstd encodes with it
-    across levels incl. 19 (which reuses the dict entropy tables via
-    Treeless/Repeat_Mode) and the from-spec decoder must replay every
-    frame. Missing/mismatched dictionaries reject loudly."""
-    import ctypes
-
-    from modeltracking_spark.operators.zstd import zstd_parse_dictionary
-
+def _trained_dict(tmp_path) -> bytes:
+    """A structured dictionary trained by the zstd CLI."""
     rng = random.Random(13)
     samples = []
     for i in range(80):
@@ -419,7 +456,21 @@ def test_trained_structured_dict_decode_vs_libzstd(tmp_path):
          "--maxdict=4096"],
         check=True, capture_output=True,
     )
-    dblob = dfile.read_bytes()
+    return dfile.read_bytes()
+
+
+@needs_cli
+def test_trained_structured_dict_decode_vs_libzstd(tmp_path):
+    """zstd --train builds a REAL structured dictionary (magic,
+    entropy tables, offset history, content); libzstd encodes with it
+    across levels incl. 19 (which reuses the dict entropy tables via
+    Treeless/Repeat_Mode) and the from-spec decoder must replay every
+    frame. Missing/mismatched dictionaries reject loudly."""
+    import ctypes
+
+    from modeltracking_spark.operators.zstd import zstd_parse_dictionary
+
+    dblob = _trained_dict(tmp_path)
     d = zstd_parse_dictionary(dblob)
     assert d.dict_id != 0 and d.huf_table is not None and d.content
 
